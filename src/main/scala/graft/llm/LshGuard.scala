@@ -3,13 +3,16 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Hot-bucket guard for LSH bucket self-joins.
+/** Hot-bucket guard for bucketed candidate generation.
   *
-  * Every LSH candidate generator in this package joins a banded table to
-  * itself on (band, bucket): cost Σ bucket². That sum is bounded only while
-  * the LARGEST bucket is — one degenerate bucket (empty documents,
-  * boilerplate headers, zero vectors all hashing identically) turns the
-  * self-join quadratic at 100 TB no matter how good the banding is.
+  * Every LSH candidate generator in this package, and the deletion-band
+  * record linkage (`operators.Linkage`), pairs the members of each bucket
+  * of a banded table: cost Σ bucket². That sum is bounded only while the
+  * LARGEST bucket is — one degenerate bucket (empty documents,
+  * boilerplate headers, zero vectors, a corpus of identical names all
+  * hashing alike) turns pairing quadratic at 100 TB no matter how good
+  * the banding is. This guard is the only path those callers take; it
+  * is always on.
   *
   * The guard splits buckets at `maxBucket` members:
   *
@@ -51,40 +54,19 @@ object LshGuard {
                         maxBucket: Int, ordered: Boolean): DataFrame = {
     require(maxBucket >= 2, "maxBucket must allow at least one pair")
     val keys = keyCols.map(col)
-    // Pairs generated INSIDE each bucket from one grouped aggregation,
-    // not by self-joining the banded stream (r17, the Linkage/co-edge
-    // rewrite, §2.4): the a⋈b shape shuffled the banded table TWICE and
-    // probed a hash relation per row where one groupBy ships it once —
-    // and the second groupBy's exchange is the SAME (keys-partitioned)
-    // exchange the hot census above it already ran, so AQE reuses it.
-    // Per-bucket list state is SAFE here precisely because the census
-    // runs first: every bucket this sees is ≤ maxBucket members (the
-    // fast path verified no bucket is hot; the cold branch filtered the
-    // hot ones out), so the collect_list buffer is cap-bounded. Sorted
-    // positions i < j enumerate each pair once with id_a ≤ id_b; the
-    // strict filters reproduce the join's a < b / a =!= b semantics
-    // exactly, including for callers whose banded rows can repeat an
-    // (id, key) row.
-    def bucketPairs(t: DataFrame): DataFrame = {
-      val n = size(col("ids"))
-      val base = t.groupBy(keys: _*)
+    // Pairs come from one grouped aggregation per bucket
+    // (`BucketPairs`), not a self-join: one shuffle of the banded table.
+    // The per-bucket list is bounded because the census below runs first:
+    // the fast path has verified no bucket is hot, and the cold branch
+    // has filtered the hot ones out. The generator's strict id_a < id_b
+    // keeps a repeated (id, key) row from pairing with itself.
+    def bucketPairs(t: DataFrame): DataFrame =
+      t.groupBy(keys: _*)
         .agg(sort_array(collect_list(col(idCol))).as("ids"))
-        .where(n >= 2)
-      val onePer = flatten(transform(sequence(lit(1), n - 1), i =>
-        transform(sequence(i + 1, n), j =>
-          struct(element_at(col("ids"), i).as("id_a"),
-            element_at(col("ids"), j).as("id_b")))))
-      val bothDirs = flatten(transform(sequence(lit(1), n - 1), i =>
-        flatten(transform(sequence(i + 1, n), j =>
-          array(struct(element_at(col("ids"), i).as("id_a"),
-              element_at(col("ids"), j).as("id_b")),
-            struct(element_at(col("ids"), j).as("id_a"),
-              element_at(col("ids"), i).as("id_b")))))))
-      base.select(explode(if (ordered) onePer else bothDirs).as("pr"))
+        .where(size(col("ids")) >= 2)
+        .select(explode(graft.operators.BucketPairs.sortedPairs(
+          col("ids"), bothDirections = !ordered)).as("pr"))
         .select(col("pr.id_a"), col("pr.id_b"))
-        .where(if (ordered) col("id_a") < col("id_b")
-          else col("id_a") =!= col("id_b"))
-    }
     // persisted: the isEmpty probe below materializes it, and in the hot
     // branch it feeds THREE downstream subtrees (flag join, hotRows, reps)
     // that would each re-run the count aggregation over `banded` otherwise.
@@ -97,10 +79,9 @@ object LshGuard {
       .select(keyCols.map(col) :+ lit(true).as("is_hot"): _*)
       .transform(graft.core.Caching.persist)
     // Fast path — the common case. One linear count-aggregation (map-side
-    // partials, tiny output) decides; with no hot bucket the self-join
-    // runs directly against the (persisted) banded table, zero extra
-    // joins. The guard only costs real work when it is actually saving
-    // quadratic work.
+    // partials, tiny output) decides; with no hot bucket the pairs come
+    // straight from the banded table, zero extra joins. The guard only
+    // costs real work when it is actually saving quadratic work.
     if (hot.isEmpty) { hot.unpersist(); return bucketPairs(banded).distinct() }
 
     val flagged = banded.join(hot, keyCols, "left")
@@ -112,10 +93,10 @@ object LshGuard {
     val reps = hotRows.groupBy(keys: _*).agg(min(col(idCol)).as("rep"))
     val starBase = hotRows.join(reps, keyCols)
       .where(col(idCol) =!= col("rep"))
+    val star = starBase.select(col("rep").as("id_a"), col(idCol).as("id_b"))
     val starPairs =
-      if (ordered) starBase.select(col("rep").as("id_a"), col(idCol).as("id_b"))
-      else starBase.select(col("rep").as("id_a"), col(idCol).as("id_b"))
-        .union(starBase.select(col(idCol).as("id_a"), col("rep").as("id_b")))
+      if (ordered) star
+      else star.union(star.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
 
     coldPairs.union(starPairs).distinct()
   }

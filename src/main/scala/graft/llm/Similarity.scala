@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.TopKAggregator
 
 /** Similarity search over embedding columns (`ArrayType(FloatType)`).
   *
@@ -36,34 +37,6 @@ object Similarity {
     */
   def cosineHof(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Bounded top-k accumulator: the map-side partials keep at most k
-    * entries, so a knn over an n-row corpus shuffles O(partitions × k)
-    * rows per query instead of n. Ordering: score desc, id asc
-    * (deterministic ties).
-    */
-  final class TopKAggregator(k: Int)(
-      implicit seqEnc: org.apache.spark.sql.Encoder[Seq[(Long, Double)]])
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
-    private def keep(s: Seq[(Long, Double)]): Seq[(Long, Double)] =
-      s.sortBy { case (id, score) => (-score, id) }.take(k)
-    override def zero: Seq[(Long, Double)] = Seq.empty
-    // buffers are always keep()-sorted by (-score, id), so b.last is the
-    // worst kept row: a full buffer rejects a strictly-worse row with one
-    // comparison instead of re-sorting k+1 rows on every input row.
-    // Only the STRICT primitive < short-circuits — score ties (and the
-    // -0.0/0.0, NaN edges, where primitive compare and the sort's total
-    // ordering disagree) fall through to keep(), which decides exactly
-    // as before.
-    override def reduce(b: Seq[(Long, Double)], a: (Long, Double)) =
-      if (b.length >= k && a._2 < b.last._2) b
-      else keep(b :+ a)
-    override def merge(a: Seq[(Long, Double)], b: Seq[(Long, Double)]) = keep(a ++ b)
-    override def finish(r: Seq[(Long, Double)]): Seq[(Long, Double)] = keep(r)
-    override def bufferEncoder = seqEnc
-    override def outputEncoder = seqEnc
-  }
 
   /** Probe-side cap for the brute-force rankers, folded into the
     * broadcast build: both rankers broadcast the query frame AND
@@ -958,7 +931,7 @@ object Similarity {
     val ranked = if (integral) {
       val spark = scored.sparkSession
       import spark.implicits._
-      val topk = new TopKAggregator(k).toColumn
+      val topk = new TopKAggregator(k, TopKAggregator.ScoreDesc).toColumn
       val nullScore = -2.0 // below any real cosine: sorts last, restored below
       scored.select(col("vec_id").cast("long"), col("nn_id").cast("long"),
           coalesce(col("score"), lit(nullScore)).as("score"))

@@ -17,12 +17,13 @@ import org.apache.spark.sql.functions._
   *    Levenshtein distance ≤ 2 always share a variant reachable by
   *    deleting ≤ 2 characters from each (take an optimal alignment and
   *    delete, on each side, the ≤ 2 characters touched by an edit — the
-  *    surviving matched characters are equal). So an equi-join on the
-  *    ≤2-deletion neighborhood is a COMPLETE blocking band for lev ≤ 2:
-  *    nothing the downstream lev-≤-2 scorer would keep is lost, and
-  *    candidate volume is Σ bucket² over variant buckets — buckets hold
-  *    only names that are genuinely near-identical, independent of how
-  *    many customers exist. The same pigeonhole shape as the SimHash /
+  *    surviving matched characters are equal). So pairing within
+  *    ≤2-deletion neighborhood buckets is a COMPLETE blocking band for
+  *    lev ≤ 2: nothing the downstream lev-≤-2 scorer would keep is lost,
+  *    and candidate volume is Σ bucket² over variant buckets — buckets
+  *    hold only names that are genuinely near-identical, independent of
+  *    how many customers exist (a degenerate hot bucket is star-capped
+  *    by `LshGuard`). The same pigeonhole shape as the SimHash /
   *    pHash band joins. Variant fan-out is 1 + P + P(P−1)/2 keys per
   *    name with P = min(length, bandPrefix) — 172 for the 18-char
   *    fixture names, and CAPPED at 211 (default P=20) for arbitrarily
@@ -99,11 +100,20 @@ object Linkage {
     * values share a ≤2-deletion variant AND agree on every column in
     * `blockCols` (semantic block predicates, e.g. the linkage rule's
     * same-nation/same-segment requirement — pass Nil for none). Complete
-    * for any downstream scorer that requires lev(`nameCol`) ≤ 2.
+    * for any downstream scorer that requires lev(`nameCol`) ≤ 2, except
+    * inside a variant bucket of more than `maxBucket` names.
+    *
+    * Pairs come from `LshGuard.guardedCandidates`, the hot-bucket guard
+    * every banded operator uses: a bucket above `maxBucket` (a corpus of
+    * near-identical names) degrades to m−1 star edges through its min-id
+    * member instead of m(m−1)/2 pairs, and the connected-component
+    * consumers (q175) still resolve the whole cluster. The banded table
+    * is persisted lazily: the guard's census is the action that fills it,
+    * and its one pair pass then reads the cache.
     */
   def candidatePairs(df: DataFrame, idCol: String, nameCol: String,
                      blockCols: Seq[String],
-                     maxBucket: Option[Int] = None,
+                     maxBucket: Int = 10000,
                      bandPrefix: Int = DefaultBandPrefix,
                      bandFromEnd: Boolean = false): DataFrame = {
     // variants are hashed at GENERATION time and deduped as longs
@@ -116,54 +126,13 @@ object Linkage {
       .select(col(idCol) +: blockCols.map(col) :+
         explode(DeletionBandExpr(col(nameCol), bandPrefix, bandFromEnd))
           .as("band"): _*)
-    maxBucket match {
-      case Some(cap) =>
-        // opt-in star-cap: the same LshGuard every LSH band join runs —
-        // a degenerate-hot variant bucket (a corpus of near-identical
-        // names) degrades to m−1 star edges instead of m²/2, and the
-        // connected-component consumers (q175) resolve the cluster
-        // through the representative exactly like near-dup dedup does.
-        // Costs one hot-detection aggregation over the banded table, so
-        // it is off by default: variant-bucket sizes are a DATA property
-        // (how many truly near-identical names exist), already the
-        // boundedness argument, and LinkageScaleSpec tracks it.
-        // MATERIALIZED here: guardedCandidates probes the banded table
-        // with an isEmpty action and then self-joins it (two concurrent
-        // map stages) — without the eager fill each consumer re-derives
-        // every variant of every name.
-        graft.llm.LshGuard.guardedCandidates(
-          keyed.transform(graft.core.Caching.materialize),
-          blockCols :+ "band", idCol, cap, ordered = true)
-          .select(col("id_a"), col("id_b"))
-      case None =>
-        // Pairs are generated INSIDE each variant bucket from one
-        // grouped aggregation, not by self-joining the banded stream:
-        // the old a⋈b shape shuffled the 211-variants-per-name table
-        // TWICE (plus an eager materialize pass to stop the two join
-        // map stages racing the cold cache fill — r16) where one
-        // groupBy ships it once and needs no cache at all (r17: q166
-        // fill 1.25 s + 2 × 0.67 s cache-read map stages → one 0.7 s
-        // aggregation). ids within a bucket are distinct (one row per
-        // id upstream, variants deduped per name), so the sorted
-        // collect_list yields each unordered pair exactly once with
-        // id_a < id_b — identical to the join's a < b filter. Bucket
-        // state is bounded by the variant-bucket size — the SAME data
-        // property that already bounds the join's Σ bucket² output;
-        // degenerate-hot corpora use the maxBucket star-cap branch.
-        val n = size(col("ids"))
-        keyed
-          .groupBy((blockCols :+ "band").map(col): _*)
-          .agg(sort_array(collect_list(col(idCol))).as("ids"))
-          .where(n >= 2)
-          .select(explode(flatten(transform(sequence(lit(1), n - 1), i =>
-            transform(sequence(i + 1, n), j =>
-              struct(element_at(col("ids"), i).as("id_a"),
-                element_at(col("ids"), j).as("id_b")))))).as("pr"))
-          // pairs sharing several variants collapse here; distinct runs
-          // over candidate ids only (two longs), never the payload
-          .select(col("pr.id_a"), col("pr.id_b"))
-          .distinct()
-    }
+      // hash-partitioned on the guard's bucket key, then cached: the
+      // census and the pair pass both group by that key, so both read
+      // the cache with no further shuffle of the banded rows
+      .repartition((blockCols :+ "band").map(col): _*)
+      .transform(graft.core.Caching.persist)
+    graft.llm.LshGuard.guardedCandidates(keyed, blockCols :+ "band", idCol,
+      maxBucket, ordered = true)
   }
 
   /** Sorted-neighborhood candidate id pairs: every (`id_a`, `id_b`)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
+import graft.operators.{BucketPairs, TopKAggregator}
 import graft.core.Money.{dec, sumDec, sumDecFast}
 
 /** Round-4 analytic widening: pivot/unpivot reshaping, blocked fuzzy
@@ -34,22 +35,17 @@ object AnalyticQueries {
     // aggregation, not by self-joining the fact table on the basket key:
     // the self-join shuffled lineitem twice (and its two map stages
     // raced the scan) where one groupBy ships it once (§2.4). The
-    // sorted per-order part list emits, for positions i < j with
-    // ps[i] < ps[j], exactly count(a)·count(b) pairs per (a, b) — the
-    // join's multiplicity — and the strict value filter drops same-part
-    // line pairs exactly like the old u < v condition. Per-order state
+    // sorted per-order part list (a multiset) yields count(a)·count(b)
+    // pairs per (a, b) with a < b — the join's multiplicity, same-part
+    // line pairs dropped like the old u < v condition. Per-order state
     // is the basket (single-digit lines), the same Σ basket² bound.
-    val n = size(col("ps"))
     Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_list(col("l_partkey"))).as("ps"))
-      .where(n >= 2)
-      .select(explode(flatten(transform(sequence(lit(1), n - 1), i =>
-        transform(sequence(i + 1, n), j =>
-          struct(element_at(col("ps"), i).as("u"),
-            element_at(col("ps"), j).as("v")))))).as("pr"))
-      .filter(col("pr.u") < col("pr.v"))
-      .groupBy(col("pr.u").as("u"), col("pr.v").as("v"))
+      .where(size(col("ps")) >= 2)
+      .select(explode(BucketPairs.sortedPairs(col("ps"), bothDirections = false))
+        .as("pr"))
+      .groupBy(col("pr.id_a").as("u"), col("pr.id_b").as("v"))
       .agg(count(lit(1)).as("support"))
       .filter(col("support") >= 2)
       .select(col("u"), col("v"))
@@ -251,12 +247,11 @@ object AnalyticQueries {
       // RAW edge rows, no distinct: both hop expansions below are
       // semi-joins, so duplicate (o, p) rows cannot duplicate anything
       // — the old inner-join form needed the deduped edge table (and
-      // paid its full shuffle) just to bound the join fan-out.
-      // PRE-PARTITIONED once by each hop key and persisted: every
-      // round's part→order and order→part expansion then satisfies its
-      // join distribution from the cache, so only the (small) frontier
-      // side shuffles per round — the old shape re-exchanged the full
-      // edge table on every one of the 6 hop joins (§2.4).
+      // paid its full shuffle) just to bound the join fan-out. The edge
+      // table is persisted as scanned, not partitioned by a hop key: the
+      // hop semi-joins avoid exchanging it because their build side, the
+      // small frontier (or its order set), is what AQE broadcasts while
+      // it stays small, so the cached edges stream through unshuffled.
       val edges = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .persist(lvl)
@@ -457,15 +452,11 @@ object AnalyticQueries {
         baskets.agg(count(lit(1)).as("n_baskets")))
       val cnt = baskets.select(explode(col("bs")).as("brand"))
         .groupBy(col("brand")).agg(count(lit(1)).as("n"))
-      val nb = size(col("bs"))
       val pairs = baskets
-        .where(nb >= 2)
-        .select(explode(flatten(transform(sequence(lit(1), nb - 1), i =>
-          transform(sequence(i + 1, nb), j =>
-            struct(element_at(col("bs"), i).as("brand_a"),
-              element_at(col("bs"), j).as("brand_b")))))).as("pr"))
-        .groupBy(col("pr.brand_a").as("brand_a"),
-          col("pr.brand_b").as("brand_b"))
+        .where(size(col("bs")) >= 2)
+        .select(explode(BucketPairs.sortedPairs(col("bs"), bothDirections = false))
+          .as("pr"))
+        .groupBy(col("pr.id_a").as("brand_a"), col("pr.id_b").as("brand_b"))
         .agg(count(lit(1)).as("n_ab"))
       pairs
         .join(broadcast(cnt.select(col("brand").as("brand_a"), col("n").as("n_a"))),
@@ -755,7 +746,7 @@ object AnalyticQueries {
         .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
         .as[(String, Long, Double)]
         .groupByKey(_._1).mapValues(r => (r._2, r._3))
-        .agg(new graft.llm.Similarity.TopKAggregator(3).toColumn.name("top"))
+        .agg(new TopKAggregator(3, TopKAggregator.ScoreDesc).toColumn.name("top"))
         .toDF("o_orderpriority", "top")
       topk.select(col("o_orderpriority"),
           posexplode(col("top")).as(Seq("pos0", "t")))

@@ -129,18 +129,15 @@ object CorpusQueries {
       // chash (r17 LshGuard/co-edge rewrite, §2.4): one shuffle of the
       // membership rows, no second join side. The df census above runs
       // FIRST (count only, safe at any skew) so every collected bucket
-      // is ≤ 100 docs; cd rows are distinct (chash, doc_id), so sorted
-      // positions i < j enumerate each doc pair once with doc_a < doc_b
-      // — identical to the join's a < b rows, once per shared chunk.
-      val n = size(col("ds"))
+      // is ≤ 100 docs; cd rows are distinct (chash, doc_id), so each doc
+      // pair comes out once per shared chunk with doc_a < doc_b —
+      // identical to the join's a < b rows.
       val edges = cd.join(shared, Seq("chash"), "left_semi")
         .groupBy(col("chash"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .select(explode(flatten(transform(sequence(lit(1), n - 1), i =>
-          transform(sequence(i + 1, n), j =>
-            struct(element_at(col("ds"), i).as("doc_a"),
-              element_at(col("ds"), j).as("doc_b")))))).as("pr"))
-        .groupBy(col("pr.doc_a").as("doc_a"), col("pr.doc_b").as("doc_b"))
+        .select(explode(graft.operators.BucketPairs.sortedPairs(
+          col("ds"), bothDirections = false)).as("pr"))
+        .groupBy(col("pr.id_a").as("doc_a"), col("pr.id_b").as("doc_b"))
         .agg(count(lit(1)).as("n_shared"))
         .where(col("n_shared") >= 2L)
         .select(col("doc_a"), col("doc_b"))

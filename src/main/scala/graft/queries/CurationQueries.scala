@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.operators.TopKAggregator
 
 /** Round-10 widening: the curation-recipe pack — the passes a real
   * training-data pipeline runs between raw crawl and mixture, each as
@@ -677,7 +678,7 @@ object CurationQueries {
         .otherwise(lit("co.uk"))
       val prio = graft.llm.TextFunctions.portableHash(
         col("doc_id").cast("string"), 23)
-      val topk = new graft.llm.Similarity.TopKAggregator(k).toColumn
+      val topk = new TopKAggregator(k, TopKAggregator.ScoreDesc).toColumn
       docs.select(host.as("host"), col("doc_id"), prio.as("prio"))
         .withColumn("domain",
           graft.llm.Domains.registrableDomain(col("host")))

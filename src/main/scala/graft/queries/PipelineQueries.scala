@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
 import graft.core.Money.{dec, sumDec, sumDecFast}
+import graft.operators.TopKAggregator
 import graft.llm.{TextFunctions => TF}
 
 /** Round-4 pipeline widening: event sessionization (row labeling, not
@@ -325,7 +326,7 @@ object PipelineQueries {
         // TopKAggregator keeps MAX score with ties to min id; negate the
         // hash to keep the SMALLEST hashes (< 2^32, exact in double)
         .mapValues(r => (r._2, -r._3.toDouble))
-        .agg(new graft.llm.Similarity.TopKAggregator(20).toColumn.name("top"))
+        .agg(new TopKAggregator(20, TopKAggregator.ScoreDesc).toColumn.name("top"))
         .toDF("lang", "top")
       topk.select(col("lang"), explode(col("top")).as("t"))
         .select(col("lang"), col("t._1").as("doc_id"))

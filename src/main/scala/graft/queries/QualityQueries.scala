@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.core.Money.dec
+import graft.operators.TopKAggregator
 
 /** Round-6 widening, part 2: the data-platform operators a production
   * warehouse team reaches for daily that the 163-query gate still lacked —
@@ -194,25 +195,19 @@ object QualityQueries {
       // ordered co-occurrence pairs generated INSIDE each basket from
       // one grouped aggregation instead of the distinct + self-join on
       // the basket key (§2.4 — the r17 frequentCoEdges/q136 rewrite):
-      // the sorted DISTINCT per-order part list emits, for positions
-      // i < j, both (ps[i], ps[j]) and (ps[j], ps[i]) — exactly the
-      // item =!= rec rows the join produced, once per order each
-      val n = size(col("ps"))
+      // the sorted DISTINCT per-order part list yields both directions
+      // of every part pair — exactly the item =!= rec rows the join
+      // produced, once per order each
       val co = Tables.lineitem(s, dir)
         .groupBy(col("l_orderkey"))
         .agg(sort_array(array_distinct(collect_list(col("l_partkey"))))
           .as("ps"))
-        .where(n >= 2)
-        .select(explode(flatten(transform(sequence(lit(1), n - 1), i =>
-          flatten(transform(sequence(i + 1, n), j =>
-            array(struct(element_at(col("ps"), i).as("item"),
-                element_at(col("ps"), j).as("rec")),
-              struct(element_at(col("ps"), j).as("item"),
-                element_at(col("ps"), i).as("rec"))))))))
-          .as("pr"))
-        .groupBy(col("pr.item").as("item"), col("pr.rec").as("rec"))
+        .where(size(col("ps")) >= 2)
+        .select(explode(graft.operators.BucketPairs.sortedPairs(
+          col("ps"), bothDirections = true)).as("pr"))
+        .groupBy(col("pr.id_a").as("item"), col("pr.id_b").as("rec"))
         .agg(count(lit(1)).as("cnt"))
-      val topk = new graft.llm.Similarity.TopKAggregator(3).toColumn
+      val topk = new TopKAggregator(3, TopKAggregator.ScoreDesc).toColumn
       co.select(col("item"), col("rec"), col("cnt").cast("double").as("score"))
         .as[(Long, Long, Double)]
         .groupByKey(_._1)
@@ -899,7 +894,7 @@ object QualityQueries {
 
     // Bottom-k quantile sketch: per-group medians from a DETERMINISTIC
     // 256-row sample — rows with the smallest content-hash priorities,
-    // kept by the mergeable BottomKAggregator (k rows of state per
+    // kept by the mergeable bounded TopKAggregator (k rows of state per
     // partial, the sketch shape that survives any partitioning). Unlike
     // a random reservoir the sample is reproducible, so the oracle
     // re-derives the identical sketch (rank-by-hash + LIMIT) — and the
@@ -913,7 +908,7 @@ object QualityQueries {
           graft.llm.TextFunctions.portableHash(
             col("event_id").cast("string"), 7).as("prio"))
         .as[(String, Long, Double, Long)]
-      val bk = new graft.operators.BottomKAggregator(kN).toColumn
+      val bk = new TopKAggregator(kN, TopKAggregator.PriorityAsc).toColumn
       val sampled = ev.groupByKey(_._1)
         .mapValues { case (_, id, v, prio) => (prio, id, v) }
         .agg(bk.name("sample"))

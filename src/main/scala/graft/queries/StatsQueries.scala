@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.TopKAggregator
 import graft.llm.TextFunctions
 
 /** Round-7 widening: corpus-evaluation statistics a training-data team
@@ -38,7 +39,7 @@ object StatsQueries {
       import s.implicits._
       val k = 50
       val prio = TextFunctions.portableHash(col("doc_id").cast("string"), 11)
-      val topk = new graft.llm.Similarity.TopKAggregator(k).toColumn
+      val topk = new TopKAggregator(k, TopKAggregator.ScoreDesc).toColumn
       graft.core.Tables.documents(s, dir)
         .select(col("source"), col("doc_id"), prio.as("prio"))
         .as[(String, Long, Long)]

@@ -75,7 +75,11 @@ object ExactlyOnce {
   }
 
   /** Build a foreachBatch function with exactly-once + retry + DLQ:
-    *  - skip batchIds already in the ledger (idempotent replay);
+    *  - skip batchIds already in the ledger (idempotent replay): the
+    *    sink is not called, but the batch still runs into a no-op sink,
+    *    because a stateful upstream commits its state-store version only
+    *    when the batch executes (Spark 4.1 fails the restart with
+    *    STATE_STORE_COMMIT_VALIDATION_FAILED otherwise);
     *  - retry transient sink failures with linear backoff
     *    (AsyncEgressProcessingStage retry, IngressAndEgressStages.cs:269-630);
     *  - after exhausting retries, either divert the batch to a dead-letter
@@ -119,6 +123,6 @@ object ExactlyOnce {
             case None => throw lastErr
           }
         } finally batch.unpersist()
-      }
+      } else batch.write.format("noop").mode("overwrite").save()
   }
 }

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{Dataset, Encoder, KeyValueGroupedDataset}
 import org.apache.spark.sql.streaming._
 
 /** Online per-key quantile monitoring over the deterministic bottom-k
-  * sketch (`operators/BottomKAggregator`'s streaming face): state per key
-  * is AT MOST k (priority, id, value) rows — the mergeable-sketch
-  * property (bottom-k of a union folds from per-part bottom-k's) is
-  * exactly what makes cross-batch accumulation sound. Each batch emits
-  * the key's current sample-median estimate.
+  * sketch (the streaming face of `operators.TopKAggregator` under
+  * `PriorityAsc`): state per key is AT MOST k (priority, id, value)
+  * rows — the mergeable-sketch property (bottom-k of a union folds from
+  * per-part bottom-k's) is exactly what makes cross-batch accumulation
+  * sound. Each batch emits the key's current sample-median estimate.
   *
   * Because priorities are content hashes, the retained sample — and so
   * the estimate — is independent of batch boundaries and replay order:

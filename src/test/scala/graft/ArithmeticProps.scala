@@ -3,7 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 import graft.datastream.WindowedStream
-import graft.operators.AggregateFunction
+import graft.operators.{AggregateFunction, TopKAggregator}
 
 /** ScalaCheck property suite (SURVEY §5 test plan): window-assignment
   * arithmetic and aggregate merge laws, checked over randomized inputs.
@@ -93,12 +93,14 @@ object ArithmeticProps extends Properties("graft.arithmetic") {
   // makes bounding the ANN ranking shuffle at k rows SAFE)
   private implicit val topkEnc: org.apache.spark.sql.Encoder[Seq[(Long, Double)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+  private implicit val bottomkEnc: org.apache.spark.sql.Encoder[Seq[(Long, Long, Double)]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
   private val pairsGen =
     Gen.listOf(Gen.zip(Gen.choose(0L, 50L), Gen.choose(0.0, 1.0).map(d => math.rint(d * 100) / 100)))
 
   property("topk partial merge equals global topk for any partition split") =
     forAll(pairsGen, pairsGen, Gen.choose(1, 8)) { (xs, ys, k) =>
-      val agg = new graft.llm.Similarity.TopKAggregator(k)
+      val agg = new TopKAggregator(k, TopKAggregator.ScoreDesc)
       def fold(s: List[(Long, Double)]) = s.foldLeft(agg.zero)(agg.reduce)
       val merged = agg.finish(agg.merge(fold(xs), fold(ys)))
       val whole = agg.finish(fold(xs ++ ys))
@@ -235,16 +237,30 @@ object ArithmeticProps extends Properties("graft.arithmetic") {
     java.lang.Long.bitCount(h ^ h2) > k || shares
   }
 
-  // BottomKAggregator's partial-aggregation soundness: the bottom-k of a
-  // union is recoverable from per-part bottom-k's alone — k rows of
-  // state per partial is enough at any partitioning.
+  // Bottom-k partial-aggregation soundness: the bottom-k of a union is
+  // recoverable from per-part bottom-k's alone — k rows of state per
+  // partial is enough at any partitioning. Checked on the aggregator
+  // itself (PriorityAsc) against a plain sort of the whole input.
   property("bottom-k of union equals bottom-k of merged bottom-k's") = forAll(
     Gen.listOf(Gen.zip(Gen.choose(0L, 1000L), Gen.choose(0L, 100000L))),
     Gen.listOf(Gen.zip(Gen.choose(0L, 1000L), Gen.choose(0L, 100000L))),
-    Gen.choose(1, 16)) { (a, b, k) =>
-    def keep(s: List[(Long, Long)]) = s.sortBy(identity).take(k)
-    keep(a ++ b) == keep(keep(a) ++ keep(b))
+    Gen.choose(1, 16)) { (a0, b0, k) =>
+    val agg = new TopKAggregator(k, TopKAggregator.PriorityAsc)
+    def rows(s: List[(Long, Long)]) = s.map { case (p, id) => (p, id, id * 0.5) }
+    def fold(s: List[(Long, Long, Double)]) = s.foldLeft(agg.zero)(agg.reduce)
+    val (a, b) = (rows(a0), rows(b0))
+    val merged = agg.finish(agg.merge(fold(a), fold(b)))
+    merged == (a ++ b).sortBy(r => (r._1, r._2)).take(k) &&
+      merged == agg.finish(fold(a ++ b))
   }
+
+  // k = 0 would keep nothing and silently empty every group: both
+  // orderings refuse it at construction
+  property("bounded top-k rejects k = 0 under both orderings") =
+    Prop.throws(classOf[IllegalArgumentException])(
+      new TopKAggregator(0, TopKAggregator.ScoreDesc)) &&
+    Prop.throws(classOf[IllegalArgumentException])(
+      new TopKAggregator(0, TopKAggregator.PriorityAsc))
 
   // DeletionBandExpr's scratch-buffer arraycopy dance (ASCII path) and
   // code-point path both equal the obviously-correct reference

@@ -41,12 +41,10 @@ class CachingSpec extends AnyFunSuite {
     val c = graft.core.Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
         col("c_mktsegment"))
-    // the star-cap branch still materializes its banded table (the
-    // default branch became cache-free in r17 — grouped pair
-    // generation needs no self-join and so no cache)
+    // candidatePairs persists its banded table: the hot-bucket census
+    // fills it, and the one pair pass reads it back
     graft.operators.Linkage.candidatePairs(
-      c, "c_custkey", "c_name", Seq("c_nationkey", "c_mktsegment"),
-      maxBucket = Some(10000)).count()
+      c, "c_custkey", "c_name", Seq("c_nationkey", "c_mktsegment")).count()
     assert(!cacheEmpty, "outside a scope the band table stays cached " +
       "(released by the session-level clearCache, as in Verify/Bench)")
     spark.catalog.clearCache()

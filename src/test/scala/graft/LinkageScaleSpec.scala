@@ -148,14 +148,38 @@ class LinkageScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("opt-in star-capped candidates equal the exhaustive join below the cap") {
-    val exhaustive = Linkage.candidatePairs(customers, "c_custkey", "c_name",
-      blockCols).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val capped = Linkage.candidatePairs(customers, "c_custkey", "c_name",
-      blockCols, maxBucket = Some(10000)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(capped === exhaustive,
-      "no bucket approaches the cap at spec scale, so the guard must be a no-op")
+  test("a hot variant bucket degrades to m-1 star pairs, not one n^2 row") {
+    import spark.implicits._
+    // m > maxBucket (10000) customers share one short name in one block:
+    // every variant bucket of "ab" holds all m ids. Exhaustive pairing
+    // would collect the bucket into one row and emit m(m-1)/2 ≈ 50M
+    // pairs from it; the guard routes each member through the min-id
+    // representative instead. Two lev-1 names in the same block stay cold.
+    val m = 10050
+    val hot = (1 to m).map(i => (i.toLong, "ab"))
+    val cold = Seq((20001L, "Customer#01"), (20002L, "Customer#02"))
+    val c = (hot ++ cold).toDF("c_custkey", "c_name")
+      .withColumn("c_nationkey", lit(7)).withColumn("c_mktsegment", lit("AUTO"))
+    val pairs = Linkage.candidatePairs(c, "c_custkey", "c_name", blockCols)
+      .as[(Long, Long)].collect()
+    val star = pairs.filter(_._2 <= m)
+    assert(star.length === m - 1, s"expected ${m - 1} star pairs, got ${star.length}")
+    assert(star.toSet === (2L to m.toLong).map(x => (1L, x)).toSet,
+      "every hot member pairs with the min-id representative only")
+    assert(pairs.filter(_._2 > m).toSet === Set((20001L, 20002L)),
+      "cold buckets still pair exhaustively")
+  }
+
+  test("a repeated customer id never pairs with itself") {
+    import spark.implicits._
+    // id 5 appears twice (a duplicated upstream row): its variants put
+    // 5 twice into every shared bucket, which must not yield (5, 5)
+    val c = Seq((5L, "Customer#005"), (5L, "Customer#005"), (6L, "Customer#006"))
+      .toDF("c_custkey", "c_name")
+      .withColumn("c_nationkey", lit(1)).withColumn("c_mktsegment", lit("AUTO"))
+    val pairs = Linkage.candidatePairs(c, "c_custkey", "c_name", blockCols)
+      .as[(Long, Long)].collect().toSet
+    assert(pairs === Set((5L, 6L)), s"self-pair or lost pair: $pairs")
   }
 
   test("DeletionBandExpr hashes equal xxhash64 over the HOF deletion band " +

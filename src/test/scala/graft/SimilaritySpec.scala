@@ -300,6 +300,31 @@ class SimilaritySpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet
     assert(both.contains((0L, 7L)) && both.contains((7L, 0L)))
     assert(both.filter(p => p._1 < 500L || p._2 < 500L).size === 398)
+
+    // degenerate buckets [], [x], [x, x], [a, b, c] in both modes: no
+    // self-pair, no exception, through the guard and the bare generator
+    val lists = Seq(Seq.empty[Long], Seq(9L), Seq(9L, 9L), Seq(1L, 2L, 3L))
+    val abc = Set((1L, 2L), (1L, 3L), (2L, 3L))
+    for (ordered <- Seq(true, false)) {
+      val expected = if (ordered) abc else abc ++ abc.map(_.swap)
+      val bare = lists.toDF("ids")
+        .select(graft.operators.BucketPairs.sortedPairs(col("ids"),
+          bothDirections = !ordered).as("prs"))
+        .collect().toSeq.map(_.getSeq[org.apache.spark.sql.Row](0)
+          .map(r => (r.getLong(0), r.getLong(1))))
+      assert(bare.take(3).forall(_.isEmpty),
+        s"size < 2 and [x, x] must give no pair (ordered=$ordered): $bare")
+      assert(bare(3).toSet === expected && bare(3).size === expected.size)
+      for ((ids, i) <- lists.zipWithIndex) {
+        val got = LshGuard.guardedCandidates(
+            ids.map(id => (id, 0, s"d$i")).toDF("doc_id", "band", "bucket"),
+            Seq("band", "bucket"), "doc_id", maxBucket = 10, ordered)
+          .as[(Long, Long)].collect().toSet
+        assert(got.forall(p => p._1 != p._2), s"self-pair from $ids: $got")
+        assert(got === (if (ids.size == 3) expected else Set.empty[(Long, Long)]),
+          s"guard on $ids (ordered=$ordered): $got")
+      }
+    }
   }
 
   test("simhash/minhash near-dup results unchanged when the guard never trips") {

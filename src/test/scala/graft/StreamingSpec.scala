@@ -59,6 +59,60 @@ class StreamingSpec extends AnyFunSuite {
     assert(counter.get() === 100)
   }
 
+  test("replayed batch of a stateful query restarts: drained, not re-sunk") {
+    // A crash after the ledger commit but before Spark's commit-log write
+    // replays that batchId on restart. The ledger keeps it out of the
+    // sink, but the batch must still execute: dropDuplicates commits its
+    // state-store version only when the batch runs.
+    import java.nio.file.{Files => F, Paths}
+    val dir = tmp("eo-stateful")
+    val in = Paths.get(dir, "in")
+    F.createDirectories(in)
+    def addFile(i: Int, ids: Long*): Unit = {
+      val f = in.resolve(s"f$i.json")
+      F.write(f, ids.map(id => s"""{"event_id":$id}""").mkString("\n").getBytes)
+      f.toFile.setLastModified(1700000000000L + i * 1000L)
+    }
+    addFile(0, 1, 2, 3); addFile(1, 3, 4); addFile(2, 5, 1)
+    val calls = new java.util.concurrent.ConcurrentHashMap[Long, AtomicLong]()
+    val delivered = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val ledger = new ExactlyOnce.BatchLedger(s"$dir/ledger")
+    val sink = new ExactlyOnce.TransactionalBatchSink {
+      def write(batch: DataFrame, batchId: Long): Unit = {
+        calls.computeIfAbsent(batchId, _ => new AtomicLong(0)).incrementAndGet()
+        batch.collect().foreach(r => delivered.add(r.getLong(0)))
+      }
+    }
+    // no watermark, so no extra no-data batches: one batch per file
+    def run(): Unit = spark.readStream.schema("event_id BIGINT")
+      .option("maxFilesPerTrigger", 1).json(in.toString)
+      .dropDuplicates("event_id")
+      .writeStream.option("checkpointLocation", s"$dir/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch(ExactlyOnce.foreachBatchIdempotent(sink, ledger))
+      .start().awaitTermination()
+    run()
+    // the crash: batch 2 is in the ledger, but not in Spark's commit log
+    val commits = new java.io.File(s"$dir/ckpt/commits")
+    val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit))
+      .map(_.toLong).max
+    assert(last === 2L)
+    Seq(s"$last", s".$last.crc").foreach(n => new java.io.File(commits, n).delete())
+    addFile(3, 2, 6)
+    run() // replays batch 2 under its old id, then runs batch 3
+    assert(new java.io.File(commits, "3").exists(), "restart ran to the end")
+    import scala.jdk.CollectionConverters._
+    assert(calls.asScala.map { case (b, n) => b -> n.get() }.toMap ===
+      Map(0L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 1L),
+      "each batch reached the sink exactly once")
+    assert(delivered.asScala.toSeq.sorted === (1L to 6L),
+      "each event id delivered once across the replay")
+    val markers = F.list(Paths.get(dir, "ledger")).iterator().asScala
+      .map(_.getFileName.toString).toSeq.sorted
+    assert(markers === (0 to 3).map(b => s"batch-$b.committed"),
+      "one ledger commit per batchId")
+  }
+
   test("transient failures are retried; commit happens exactly once") {
     counter.set(0)
     val attempts = new AtomicLong(0)
